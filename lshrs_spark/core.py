@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import LSHConfig
-from .hashing import hash_vectors_local_long, projection_matrix
+from .hashing import keys_per_query, projection_matrix, resolve_sig_kind
 from .operators.index import build_index, read_index, validate_vectors, write_index
 from .operators.probe import (
     candidates,
@@ -129,7 +129,7 @@ class LSHRS:
         truth — not stored, so pickle/restore can't drift): long sigs
         when they fit in int64 (join-friendliest), binary for
         rows_per_band >= 64 configs like the planner's (64, 64)."""
-        return "long" if self.cfg.use_long_sig else "binary"
+        return resolve_sig_kind(self.cfg)
 
     # ------------------------------------------------------------------ #
     # properties
@@ -338,11 +338,8 @@ class LSHRS:
             )
         if index_rows is None:
             index_rows = self._index_rows
-        keys_per_query = self.cfg.num_bands * (
-            1 + min(multiprobe, self.cfg.rows_per_band)
-        )
         strategy = "broadcast" if n_queries is None else choose_probe_strategy(
-            n_queries, keys_per_query, index_rows
+            n_queries, keys_per_query(self.cfg, multiprobe), index_rows
         )
         cands = candidates(self.index_df, qsigs, strategy=strategy)
         if top_p is None:
@@ -462,11 +459,9 @@ class LSHRS:
         # (1 + multiprobe) signature rows per band, so the cost rule
         # must see the multiplied count or it undercounts the broadcast
         # payload by that factor.
-        keys_per_query = self.cfg.num_bands * (
-            1 + min(multiprobe, self.cfg.rows_per_band)
-        )
         strategy = choose_probe_strategy(
-            len(vectors), keys_per_query, self._index_rows
+            len(vectors), keys_per_query(self.cfg, multiprobe),
+            self._index_rows,
         )
         rows = _probe_top_k(
             candidates(self.index_df, qsigs, strategy=strategy), topk
@@ -497,11 +492,9 @@ class LSHRS:
             self.spark, mat, self.cfg, sig_kind=self._sig_kind,
             multiprobe=multiprobe,
         )
-        keys_per_query = self.cfg.num_bands * (
-            1 + min(multiprobe, self.cfg.rows_per_band)
-        )
         strategy = choose_probe_strategy(
-            len(vectors), keys_per_query, self._index_rows
+            len(vectors), keys_per_query(self.cfg, multiprobe),
+            self._index_rows,
         )
         cands = candidates(self.index_df, qsigs, strategy=strategy)
         if self._vectors_df is None:

@@ -362,9 +362,19 @@ def minhash_band_pairs(
     self-joins broadcast at bench scale, so the extra exchange buys
     nothing locally; at a scale where the join shuffles, the cached
     narrow table shuffles once per side, still cheaper than two full
-    pipeline evaluations). Persisting also removes the former hazard
-    note for NONdeterministic inputs (sample/limit upstream): both
-    sides now read one materialization."""
+    pipeline evaluations).
+
+    Building the plan is EAGER: the persist runs a ``count()`` Spark
+    job at call time, and the band-key table stays cached until the
+    next call of this function releases the slot (a caller done with
+    the pairs can free it with
+    ``cache.release_slot("dedup.minhash_band_pairs")``). Both join sides
+    read that one materialization only while the slot is live. A
+    second call before the first result is evaluated, or a lost cache
+    block, makes each side recompute from the input, so a
+    NONdeterministic input (sample/limit upstream) can still diverge
+    between the sides — materialize such inputs first (e.g.
+    ``cache.materialize_slot``)."""
     key = persist_slot(
         minhash_band_keys(df, num_hashes, rows_per_band, n, id_col,
                           text_col, seed, base_hash),

@@ -29,11 +29,7 @@ from pyspark.sql import functions as F
 
 from ..config import LSHConfig
 from ..functions.vector import dot_product, l2_norm, l2_normalize
-from ..hashing import (
-    hash_vectors_local,
-    hash_vectors_local_long,
-    multiprobe_keys_local,
-)
+from ..hashing import probe_keys_local, resolve_sig_kind
 
 __all__ = [
     "query_signatures_df",
@@ -62,33 +58,23 @@ def query_signatures_df(
 
     ``multiprobe=T`` additionally emits, per band, the ``T``
     closest-margin single-bit-flip perturbation keys
-    (:func:`~lshrs_spark.hashing.multiprobe_keys_local`) — multi-probe
+    (:func:`~lshrs_spark.hashing.probe_keys_local`) — multi-probe
     LSH as EXTRA PROBE ROWS, so the downstream join/aggregation plans
     are unchanged: a perturbed-bucket match counts as a collision like
     any other, and recall rises without adding bands to the index."""
-    if sig_kind is None:
-        sig_kind = "long" if cfg.use_long_sig else "binary"
-    vectors = np.atleast_2d(np.asarray(vectors))
+    return spark.createDataFrame(
+        *_signature_rows(vectors, cfg, qids, sig_kind, multiprobe))
+
+
+def _signature_rows(vectors, cfg: LSHConfig, qids, sig_kind, multiprobe):
+    """``(rows, schema)`` of :func:`query_signatures_df`."""
+    sig_kind = resolve_sig_kind(cfg, sig_kind)
+    keys = probe_keys_local(vectors, cfg, multiprobe, sig_kind=sig_kind)
     if qids is None:
-        qids = range(len(vectors))
-    qids = list(qids)
-    rows = []
-    if sig_kind == "long":
-        sigs = hash_vectors_local_long(vectors, cfg)
-        for qid, row in zip(qids, sigs):
-            rows.extend((int(qid), b, int(s)) for b, s in enumerate(row))
-        schema = "qid long, band int, sig long"
-    else:
-        sigsb = hash_vectors_local(vectors, cfg)
-        for qid, row in zip(qids, sigsb):
-            rows.extend((int(qid), b, bytes(s)) for b, s in enumerate(row))
-        schema = "qid long, band int, sig binary"
-    if multiprobe:
-        extra = multiprobe_keys_local(vectors, cfg, multiprobe,
-                                      sig_kind=sig_kind)
-        for qid, keys in zip(qids, extra):
-            rows.extend((int(qid), b, s) for b, s in keys)
-    return spark.createDataFrame(rows, schema)
+        qids = range(len(keys))
+    rows = [(int(q), b, s) for q, row in zip(qids, keys) for b, s in row]
+    sig_type = "long" if sig_kind == "long" else "binary"
+    return rows, f"qid long, band int, sig {sig_type}"
 
 
 def choose_probe_strategy(
@@ -185,36 +171,9 @@ def candidates_from_path(
     bit-flip keys per band to the pushed-down predicate (multi-probe
     LSH — still O(bands * (1+T)) pruned lookups, recall up with no
     index change). Returns ``(qid, id, collisions)``."""
-    vectors = np.atleast_2d(np.asarray(vectors))
-    if qids is None:
-        qids = range(len(vectors))
-    qids = list(qids)
-    if cfg.use_long_sig:
-        sigs = hash_vectors_local_long(vectors, cfg)
-        qrows = [
-            (int(qid), b, int(s))
-            for qid, row in zip(qids, sigs)
-            for b, s in enumerate(row)
-        ]
-        schema = "qid long, band int, sig long"
-    else:
-        # rows_per_band >= 64: signatures don't fit int64 — binary sigs,
-        # same pushed-down equality pruning (parquet prunes on binary
-        # min/max stats just like longs).
-        sigsb = hash_vectors_local(vectors, cfg)
-        qrows = [
-            (int(qid), b, bytes(s))
-            for qid, row in zip(qids, sigsb)
-            for b, s in enumerate(row)
-        ]
-        schema = "qid long, band int, sig binary"
-    if multiprobe:
-        extra = multiprobe_keys_local(vectors, cfg, multiprobe)
-        qrows = qrows + [
-            (int(qid), b, s)
-            for qid, keys in zip(qids, extra)
-            for b, s in keys
-        ]
+    # rows_per_band >= 64 configs probe with binary sigs: parquet prunes
+    # on binary min/max stats just like longs
+    qrows, schema = _signature_rows(vectors, cfg, qids, None, multiprobe)
     index_df = spark.read.parquet(index_path)
     pred = None
     pairs = {(b, s) for _, b, s in qrows}

@@ -35,11 +35,7 @@ import pyarrow as pa
 import pyarrow.dataset as pads
 
 from .config import LSHConfig
-from .hashing import (
-    hash_vectors_local,
-    hash_vectors_local_long,
-    multiprobe_keys_local,
-)
+from .hashing import probe_keys_local
 
 __all__ = [
     "IndexServer", "SegmentedIndexServer", "IVFServer", "PQServer",
@@ -265,31 +261,22 @@ class IndexServer:
             raise ValueError("Cannot index or query a zero vector")
         return vec
 
-    def _bucket_filter(self, vec: np.ndarray,
-                       multiprobe: int = 0) -> pads.Expression:
-        """OR of per-band ``(band = b AND sig = s)`` equalities — the same
-        predicate `candidates_from_path` pushes into the Spark scan,
+    def _bucket_filter(self, vectors: np.ndarray, multiprobe: int = 0):
+        """``(keys, expr)``: each query's ``(band, sig)`` probe keys and
+        the OR of ``(band = b AND sig = s)`` over the distinct keys —
+        the predicate `candidates_from_path` pushes into the Spark scan,
         evaluated here against cached parquet stats. ``multiprobe=T``
-        ORs in the T closest-margin bit-flip keys per band (multi-probe
+        adds the T closest-margin bit-flip keys per band (multi-probe
         LSH): ``num_bands * T`` extra pruned bucket reads, recall up
-        with no index change — the serving twin of the Spark path's
-        extra probe rows."""
+        with no index change."""
+        keys = probe_keys_local(vectors, self.cfg, multiprobe)
         band = pads.field("band")
         sig = pads.field("sig")
-        if self.cfg.use_long_sig:
-            sigs = hash_vectors_local_long(vec[None, :], self.cfg)[0]
-            keys = [(b, int(s)) for b, s in enumerate(sigs)]
-        else:
-            sigsb = hash_vectors_local(vec[None, :], self.cfg)[0]
-            keys = [(b, bytes(s)) for b, s in enumerate(sigsb)]
-        if multiprobe:
-            keys += multiprobe_keys_local(vec[None, :], self.cfg,
-                                          multiprobe)[0]
-        clauses = [(band == b) & (sig == s) for b, s in keys]
-        expr = clauses[0]
-        for c in clauses[1:]:
-            expr = expr | c
-        return expr
+        expr = None
+        for b, s in dict.fromkeys(k for qkeys in keys for k in qkeys):
+            clause = (band == b) & (sig == s)
+            expr = clause if expr is None else expr | clause
+        return keys, expr
 
     def candidate_counts(self, vector: np.ndarray,
                          multiprobe: int = 0) -> tuple[np.ndarray, np.ndarray]:
@@ -298,10 +285,8 @@ class IndexServer:
         delete is visible after :meth:`refresh` without re-saving.
         With ``multiprobe``, a perturbed-bucket match counts as a
         collision like any exact-bucket match."""
-        vec = self._prepare_vector(vector)
-        tbl = self._ds.to_table(
-            columns=["id"], filter=self._bucket_filter(vec, multiprobe)
-        )
+        _, expr = self._bucket_filter(self._prepare_vector(vector), multiprobe)
+        tbl = self._ds.to_table(columns=["id"], filter=expr)
         ids = tbl.column("id").to_numpy(zero_copy_only=False)
         ids = ids[_drop_deleted(ids, self._deleted)]
         if len(ids) == 0:
@@ -360,29 +345,7 @@ class IndexServer:
         if len(vectors) == 0:
             return []
         mat = np.stack([self._prepare_vector(v) for v in vectors])
-        nbands = self.cfg.num_bands
-        if self.cfg.use_long_sig:
-            sigs = hash_vectors_local_long(mat, self.cfg)  # (nq, bands)
-            qkeys = [
-                [(b, int(sigs[q, b])) for b in range(nbands)]
-                for q in range(len(mat))
-            ]
-        else:
-            sigsb = hash_vectors_local(mat, self.cfg)
-            qkeys = [
-                [(b, bytes(sigsb[q][b])) for b in range(nbands)]
-                for q in range(len(mat))
-            ]
-        if multiprobe:
-            extra = multiprobe_keys_local(mat, self.cfg, multiprobe)
-            for q in range(len(mat)):
-                qkeys[q] = qkeys[q] + extra[q]
-        band = pads.field("band")
-        sig = pads.field("sig")
-        expr = None
-        for b, s in {k for keys in qkeys for k in keys}:
-            clause = (band == b) & (sig == s)
-            expr = clause if expr is None else (expr | clause)
+        qkeys, expr = self._bucket_filter(mat, multiprobe)
         tbl = self._ds.to_table(columns=["band", "sig", "id"], filter=expr)
         ids = tbl.column("id").to_numpy(zero_copy_only=False)
         keep = _drop_deleted(ids, self._deleted)

@@ -8,9 +8,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _env_positive_int(name: str, default: int) -> int:
+    """``int(os.environ[name])``, or ``default`` when unset or empty;
+    raises a ``ValueError`` naming the variable on a non-integer or
+    non-positive value instead of failing later inside Spark."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value <= 0:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
+
 def get_spark(app_name: str = "lshrs_spark", *, cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 8
+        cpus = _env_positive_int("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -28,10 +44,11 @@ def get_spark(app_name: str = "lshrs_spark", *, cpus: int | None = None) -> Spar
         # (measured r15: whole-store open min 585 -> 295 ms, and far
         # less variance). Deployments reading external tables with
         # thousands of partition dirs on an object store can lower it
-        # via the env knob.
+        # via the env knob. The setting covers every read in the
+        # session, not only the engine's store opens.
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "384"),
+            str(_env_positive_int("SPARK_GRAFT_LIST_THRESHOLD", 384)),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

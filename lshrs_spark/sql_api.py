@@ -11,9 +11,7 @@ no query language; SURVEY.md §2.6).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .config import LSHConfig
 
@@ -24,29 +22,11 @@ def register_sql_functions(
     spark: SparkSession, cfg: LSHConfig, *, prefix: str = "lshrs"
 ) -> list[str]:
     """Register engine functions for SQL use; returns the names."""
-    # Build the same pandas_udf the DataFrame path uses and register it
-    # (the broadcast projection matrix is cached per config).
-    from . import hashing as H
+    # the same pandas_udf the DataFrame path uses (the broadcast
+    # projection matrix is cached per config)
+    from .hashing import signatures_udf
 
-    bproj = H._broadcast_proj(spark, cfg)
-    dim, num_bands, rows_per_band = cfg.dim, cfg.num_bands, cfg.rows_per_band
-    use_f32 = cfg.dtype == "float32"
-
-    @F.pandas_udf("array<bigint>")
-    def srp_sigs(s: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        if s.empty:
-            return pd.Series([], dtype=object)
-        dt = _np.float32 if use_f32 else _np.float64
-        mat = _np.stack(s.to_numpy()).astype(dt, copy=False)
-        if mat.ndim != 2 or mat.shape[1] != dim:
-            raise ValueError(f"vector dimension mismatch: expected {dim}")
-        bits = (mat @ bproj.value) > 0
-        weights = 1 << _np.arange(rows_per_band, dtype=_np.int64)
-        sigs = bits.reshape(len(mat), num_bands, rows_per_band).astype(
-            _np.int64) @ weights
-        return pd.Series(list(sigs))
+    srp_sigs = signatures_udf(spark, cfg)
 
     names = []
     spark.udf.register(f"{prefix}_srp_sigs", srp_sigs)

@@ -193,3 +193,160 @@ def test_signatures_col_multiprobe_binary_parity(spark):
         assert got_extra == extra
     with pytest.raises(ValueError, match="multiprobe"):
         with_signatures(df, cfg, sig_kind="binary", multiprobe=-1)
+
+
+# --------------------------------------------------------------------- #
+# One key kernel: every producer of (band, sig) probe keys must agree
+# bit for bit with the first-principles SRP + multi-probe definition.
+# --------------------------------------------------------------------- #
+
+# default kind per config: long when rows_per_band < 64, else binary
+_KIND_CFG = {
+    "long": LSHConfig(dim=16, num_perm=32, num_bands=4, rows_per_band=8,
+                      seed=11),
+    "binary": LSHConfig(dim=16, num_perm=128, num_bands=2, rows_per_band=64,
+                        seed=11),
+}
+
+
+def _first_principles_keys(vecs, cfg, kind, multiprobe):
+    """Per vector: ``{(band, sig)}`` of the exact band signatures plus,
+    per band, single-bit flips in ascending (|margin|, bit) order, and
+    the universe of every exact and single-flip key (the probe's
+    possible answers, right or wrong)."""
+    r = cfg.rows_per_band
+    z = vecs.astype(np.float32) @ projection_matrix(cfg).T
+
+    def enc(v):
+        return v if kind == "long" else v.to_bytes(cfg.sig_bytes, "little")
+
+    want, universe = [], set()
+    for zi in z:
+        keys = set()
+        for b in range(cfg.num_bands):
+            m = zi[b * r:(b + 1) * r]
+            exact = sum(1 << j for j in range(r) if m[j] > 0)
+            keys.add((b, enc(exact)))
+            flips = sorted(range(r), key=lambda j: (abs(m[j]), j))
+            keys |= {(b, enc(exact ^ (1 << j))) for j in flips[:multiprobe]}
+            universe |= {(b, enc(exact))}
+            universe |= {(b, enc(exact ^ (1 << j))) for j in range(r)}
+        want.append(keys)
+    return want, sorted(universe)
+
+
+@pytest.mark.parametrize("multiprobe", [0, 2])
+@pytest.mark.parametrize("kind", ["long", "binary"])
+def test_every_key_producer_agrees(spark, tmp_path, kind, multiprobe):
+    """build_index (Spark UDF), query_signatures_df, candidates_from_path,
+    IndexServer.candidate_counts and IndexServer.get_top_k_batch emit the
+    same (band, sig) key set per vector. The stored index holds one row
+    per universe key, so the ids a probe returns name the keys it
+    matched, and a wrong extra key would surface as a decoy id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lshrs_spark.operators.index import build_index
+    from lshrs_spark.operators.probe import (
+        candidates_from_path,
+        query_signatures_df,
+    )
+    from lshrs_spark.serving import IndexServer
+
+    cfg = _KIND_CFG[kind]
+    vecs = np.random.default_rng(5).standard_normal((6, cfg.dim)).astype(
+        np.float32)
+    want, universe = _first_principles_keys(vecs, cfg, kind, multiprobe)
+    sig_type = pa.int64() if kind == "long" else pa.binary()
+    path = str(tmp_path / "index.parquet")
+    pq.write_table(pa.table({
+        "band": pa.array([b for b, _ in universe], pa.int32()),
+        "sig": pa.array([s for _, s in universe], sig_type),
+        "id": pa.array(range(len(universe)), pa.int64()),
+    }), path)
+
+    def norm(s):
+        return int(s) if kind == "long" else bytes(s)
+
+    def by_vector(rows):
+        got = [set() for _ in vecs]
+        for i, b, s in rows:
+            got[i].add((int(b), norm(s)))
+        return got
+
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    udf_keys = by_vector(
+        (r.id, r.band, r.sig) for r in
+        build_index(df, cfg, multiprobe=multiprobe).collect())
+    qsig_keys = by_vector(
+        (r.qid, r.band, r.sig) for r in
+        query_signatures_df(spark, vecs, cfg, multiprobe=multiprobe).collect())
+    path_keys = by_vector(
+        (r.qid, *universe[r.id]) for r in
+        candidates_from_path(spark, path, vecs, cfg,
+                             multiprobe=multiprobe).collect())
+    srv = IndexServer(path, cfg)
+    count_keys = [
+        {universe[i] for i in srv.candidate_counts(v, multiprobe)[0]}
+        for v in vecs
+    ]
+    batch_keys = [
+        {universe[i] for i in ids}
+        for ids in srv.get_top_k_batch(vecs, len(universe),
+                                       multiprobe=multiprobe)
+    ]
+    assert udf_keys == want
+    assert qsig_keys == want
+    assert path_keys == want
+    assert count_keys == want
+    assert batch_keys == want
+
+
+def test_key_kernel_runs_without_the_package(tmp_path):
+    """Worker-shipping contract: the cloudpickled kernel closure runs in
+    an isolated interpreter that cannot import ``lshrs_spark`` and gives
+    the in-process keys."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from lshrs_spark.hashing import make_key_kernel
+
+    z = np.random.default_rng(9).standard_normal((7, 128))
+    cases = [(_KIND_CFG["long"], "long"), (_KIND_CFG["binary"], "binary")]
+    kernels = [make_key_kernel(cfg, kind, 2) for cfg, kind in cases]
+    payload = cloudpickle.dumps(
+        [(k, z[:, :cfg.num_perm]) for k, (cfg, _) in zip(kernels, cases)])
+    script = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('lshrs_spark') is None\n"
+        "jobs = pickle.loads(sys.stdin.buffer.read())\n"
+        "sys.stdout.buffer.write(pickle.dumps("
+        "[k(block).tolist() for k, block in jobs]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-I", "-c", script], input=payload,
+        capture_output=True, cwd=tmp_path, check=True,
+    ).stdout
+    expected = [k(z[:, :cfg.num_perm]).tolist()
+                for k, (cfg, _) in zip(kernels, cases)]
+    assert pickle.loads(out) == expected
+
+
+def test_projection_matrix_is_a_fresh_copy():
+    """The driver paths share one cached projection; a caller mutating
+    ``projection_matrix``'s result must not change later signatures."""
+    from lshrs_spark.hashing import keys_per_query
+
+    vecs = np.random.default_rng(4).standard_normal((3, 32))
+    before = hash_vectors_local_long(vecs, CFG)
+    projection_matrix(CFG)[:] = 0.0
+    np.testing.assert_array_equal(hash_vectors_local_long(vecs, CFG), before)
+    assert keys_per_query(CFG) == 4
+    assert keys_per_query(CFG, 2) == 4 * 3
+    assert keys_per_query(CFG, 99) == 4 * (1 + CFG.rows_per_band)

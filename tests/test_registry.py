@@ -413,8 +413,16 @@ def test_quiet_guard_cold_io_downgrades_quiet(monkeypatch):
     cold = {"bytes": 32 << 20, "files": 3, "t_first_s": 0.5,
             "t_resident_s": 0.05, "cold_ratio": 10.0, "io_quiet": False}
     monkeypatch.setattr(bl, "io_canary", lambda paths, **kw: cold)
-    # huge cpu budget + own_jvms allowance: the CPU/JVM leg passes in
-    # any test environment, isolating the io downgrade
+    # quiet host stubs (no JVM, no load, no steal) isolate the io
+    # downgrade; the huge cpu budget + own_jvms allowance are kept
+    monkeypatch.setattr(bl, "host_sample",
+                        lambda: {"counted_jvms": 0, "load1": 0.0})
+    monkeypatch.setattr(bl, "cpu_steal_sample",
+                        lambda interval_s=0.25: {"steal_pct": 0.0,
+                                                 "procs_running": 1})
+    monkeypatch.setattr(bl, "cpu_efficiency_sample",
+                        lambda nproc=None, burn_s=0.35: {
+                            "cpu_eff_pct": None, "cpu_single_mops": None})
     guard = bl.quiet_guard(10**6, own_jvms=99, io_paths=["/nonexistent"])
     assert guard["io"] == cold
     assert guard["quiet"] is False
@@ -466,6 +474,12 @@ def test_cpu_steal_sample_reads_proc_stat():
 def test_quiet_guard_carries_steal_and_flips_on_threshold(monkeypatch):
     import tools.bench_lines as bl
 
+    monkeypatch.setattr(bl, "host_sample",
+                        lambda: {"counted_jvms": 0, "load1": 0.0})
+    monkeypatch.setattr(bl, "cpu_efficiency_sample",
+                        lambda nproc=None, burn_s=0.35: {
+                            "cpu_eff_pct": None, "cpu_single_mops": None})
+
     # quiet reading passes through
     monkeypatch.setattr(bl, "cpu_steal_sample",
                         lambda interval_s=0.25: {"steal_pct": 0.0,
@@ -494,9 +508,14 @@ def test_quiet_guard_records_cpu_efficiency(monkeypatch):
     a clean-epoch threshold is justified)."""
     import tools.bench_lines as bl
 
+    # injected burn timing: 50k solo iterations in 0.05 s, then 45k and
+    # 40k in the two parallel burns -> 85% of 2x the solo rate
+    monkeypatch.setattr(bl, "_eff_burns",
+                        lambda nproc, burn_s: (50_000, [45_000, 40_000]))
     got = bl.cpu_efficiency_sample(nproc=2, burn_s=0.05)
     assert set(got) == {"cpu_eff_pct", "cpu_single_mops"}
     assert got["cpu_eff_pct"] is None or 0.0 < got["cpu_eff_pct"] <= 200.0
+    assert got == {"cpu_eff_pct": 85.0, "cpu_single_mops": 1.0}
 
     monkeypatch.setattr(bl, "cpu_efficiency_sample",
                         lambda nproc=None, burn_s=0.35: {
@@ -505,6 +524,9 @@ def test_quiet_guard_records_cpu_efficiency(monkeypatch):
     monkeypatch.setattr(bl, "cpu_steal_sample",
                         lambda interval_s=0.25: {"steal_pct": 0.0,
                                                  "procs_running": 1})
+    # no JVM and no load: the guard reads no host state
+    monkeypatch.setattr(bl, "host_sample",
+                        lambda: {"counted_jvms": 0, "load1": 0.0})
     g = bl.quiet_guard(32)
     assert g["cpu_eff_pct"] == 12.0
     assert g["quiet"] is True  # observational: never flips quiet

@@ -186,6 +186,16 @@ def _eff_burn(burn_s: float) -> int:
     return n
 
 
+def _eff_burns(nproc: int, burn_s: float) -> tuple[int, list[int]]:
+    """Iterations of one solo burn, then of ``nproc`` parallel burns —
+    the timed host reads behind :func:`cpu_efficiency_sample`."""
+    import multiprocessing as mp
+
+    single = _eff_burn(burn_s)
+    with mp.Pool(nproc) as pool:
+        return single, pool.map(_eff_burn, [burn_s] * nproc)
+
+
 def cpu_efficiency_sample(nproc: int | None = None,
                           burn_s: float = 0.35) -> dict:
     """``{"cpu_eff_pct", "cpu_single_mops"}`` — N-process aggregate
@@ -201,14 +211,11 @@ def cpu_efficiency_sample(nproc: int | None = None,
     ``quiet`` until a threshold is justified by that distribution —
     the clean-host ceiling of this box is not yet known. Nones on any
     failure (non-Linux, fork limits)."""
-    import multiprocessing as mp
-
     if nproc is None:
         nproc = min(32, os.cpu_count() or 8)
     try:
-        single = _eff_burn(burn_s) / burn_s
-        with mp.Pool(nproc) as pool:
-            counts = pool.map(_eff_burn, [burn_s] * nproc)
+        single_count, counts = _eff_burns(nproc, burn_s)
+        single = single_count / burn_s
         total = sum(counts) / burn_s
         return {
             "cpu_eff_pct": round(100.0 * total / (nproc * single), 1),
@@ -332,6 +339,24 @@ def io_canary(paths, *, sample_bytes: int = 32 << 20,
     return out
 
 
+def host_sample() -> dict:
+    """``{"counted_jvms", "load1"}`` — the host reads the quiet guard
+    judges: JVMs matching ``pgrep -fc "SparkSubmit|java -cp"`` (-1 when
+    pgrep fails) and the 1-minute load average. One function, so tests
+    stub the whole host side of :func:`quiet_guard` at once."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            ["pgrep", "-fc", "SparkSubmit|java -cp"],
+            capture_output=True, text=True,
+        ).stdout.strip()
+        n_java = int(out or 0)
+    except Exception:
+        n_java = -1
+    return {"counted_jvms": n_java, "load1": os.getloadavg()[0]}
+
+
 def quiet_guard(cpus: int, *, own_jvms: int = 0, io_paths=None) -> dict:
     """Record (never silently trust) host quietness: stray JVM count
     and 1-minute load — the same guard serving_probe.py writes. Shared
@@ -359,18 +384,10 @@ def quiet_guard(cpus: int, *, own_jvms: int = 0, io_paths=None) -> dict:
     inflated the r14 driver bench 2-5x under a green guard.
     ``load_divergence`` flags load1 above the threshold while
     procs_running <= 2 (a decaying loadavg or external pressure —
-    read it with steal_pct)."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["pgrep", "-fc", "SparkSubmit|java -cp"],
-            capture_output=True, text=True,
-        ).stdout.strip()
-        n_java = int(out or 0)
-    except Exception:
-        n_java = -1
-    load1 = os.getloadavg()[0]
+    read it with steal_pct). JVM count and load come from
+    :func:`host_sample`."""
+    host = host_sample()
+    n_java, load1 = host["counted_jvms"], host["load1"]
     # counted_jvms is the RAW count (VERDICT r12 wrong #3: the old
     # key name "stray_jvms" misled artifact readers when the one JVM
     # counted was the caller's own); strays = counted - own.
