@@ -5,7 +5,7 @@ every method is a DataFrame program.
 Mapping (SURVEY.md §1.3/§2):
 
 * Redis bucket store            -> index DataFrame ``(band, sig, id)``
-  (optionally persisted to Parquet via :meth:`save_to_disk`).
+  (optionally persisted as a manifest store via :meth:`save_to_disk`).
 * ``vector_fetch_fn`` callback  -> :meth:`set_vectors` registers the
   primary vector DataFrame; candidate fetch is a join.
 * buffered ingest + flush       -> Spark job batching; :meth:`ingest`
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .config import LSHConfig
 from .hashing import keys_per_query, projection_matrix, resolve_sig_kind
-from .operators.index import build_index, read_index, validate_vectors, write_index
+from .operators.index import build_index, validate_vectors
 from .operators.probe import (
     candidates,
     choose_probe_strategy,
@@ -37,6 +37,7 @@ from .operators.probe import (
 )
 from .operators.probe import top_k as _probe_top_k
 from .sources.dispatch import resolve_loader
+from .store import SegmentedIndexStore
 
 __all__ = ["LSHRS"]
 
@@ -115,10 +116,10 @@ class LSHRS:
         # mutation — lets query_batch() pick the probe join regime
         # driver-side without running a count job
         self._index_rows: Optional[int] = None
-        # last save_to_disk/load_from_disk/serve directory — delete()
-        # appends tombstones there so live IndexServers see deletes on
-        # refresh() without a full re-save
-        self._saved_path: Optional[str] = None
+        # the store of the last save_to_disk/load_from_disk/serve
+        # directory — delete() commits tombstones there so live
+        # IndexServers see deletes on refresh() without a full re-save
+        self._store: Optional[SegmentedIndexStore] = None
         import uuid
 
         self._slot_id = uuid.uuid4().hex[:12]
@@ -533,10 +534,11 @@ class LSHRS:
 
         When this index is bound to a saved directory (after
         :meth:`save_to_disk` / :meth:`serve` / :meth:`load_from_disk`),
-        the ids are also appended to a ``_deleted`` tombstone sidecar so
-        a live :class:`~lshrs_spark.serving.IndexServer` over that
-        directory stops serving them at its next ``refresh()`` — parity
-        with the reference's immediately-visible Redis delete
+        the ids are also committed to that directory's manifest store as
+        a tombstone (:meth:`SegmentedIndexStore.delete_ids`, no Spark
+        job), so a live :class:`~lshrs_spark.serving.IndexServer` over
+        it stops serving them at its next ``refresh()`` — parity with
+        the reference's immediately-visible Redis delete
         (``lshrs/core/main.py:744-784``) without rewriting the index."""
         self.flush()
         indices = list(indices)  # materialize once — may be a one-shot iterator
@@ -548,28 +550,9 @@ class LSHRS:
         self._index_df = self._index_df.join(
             F.broadcast(ids_df), "id", "left_anti"
         ).select("band", "sig", "id")
-        if self._saved_path is not None:
-            self._append_tombstones(indices)
+        if self._store is not None:
+            self._store.delete_ids(indices)
         self._note_mutation()
-
-    def _append_tombstones(self, indices: Sequence[int]) -> None:
-        """One small parquet file per delete batch under
-        ``{saved}/_deleted/`` — written driver-side via pyarrow.fs (no
-        Spark job for a handful of ids; works for object-store URIs)."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from .serving import _fs_and_path
-
-        filesystem, root = _fs_and_path(self._saved_path)
-        filesystem.create_dir(f"{root}/_deleted", recursive=True)
-        tbl = pa.table({"id": pa.array([int(i) for i in indices], pa.int64())})
-        with filesystem.open_output_stream(
-            f"{root}/_deleted/del_{uuid.uuid4().hex}.parquet"
-        ) as sink:
-            pq.write_table(tbl, sink)
 
     def clear(self) -> None:
         """Drop the whole index (M2) — irreversible, like the reference."""
@@ -600,30 +583,28 @@ class LSHRS:
     # ------------------------------------------------------------------ #
 
     def save_to_disk(self, path: str, *, include_vectors: bool = False) -> None:
-        """Config JSON + projections npz + index parquet (``main.py:846-895``;
-        no secrets to redact — there is no Redis password here).
+        """Config JSON + projections npz + the index as a
+        :class:`~lshrs_spark.store.SegmentedIndexStore` root
+        (``main.py:846-895``; no secrets to redact — there is no Redis
+        password here).
 
-        ``include_vectors=True`` additionally persists the registered vector
-        table sorted by id (``vectors.parquet``) so the no-Spark-job
+        The index is written as ONE fresh segment and committed as a new
+        manifest version with no tombstones (deletions are already
+        applied to it). ``include_vectors=True`` additionally writes the
+        registered vector table sorted by id into a fresh ``vectors/``
+        directory named by that manifest, so the no-Spark-job
         :class:`~lshrs_spark.serving.IndexServer` can serve rerank/top-p
-        queries with id-pruned reads.
+        queries with id-pruned reads; otherwise the version has no
+        vectors.
 
-        A fresh save already has all deletions applied to the index
-        parquet, so any ``_deleted`` tombstone sidecar from earlier
-        :meth:`delete` calls is cleared.
-
-        Safe to call on the SAME directory the instance was loaded from
-        (load -> delete -> re-save): an instance from
-        :meth:`load_from_disk` holds a lazy plan that still reads
-        ``{path}/index.parquet`` and ``{path}/_deleted``, so the index is
-        written to a temp sibling and swapped in only AFTER the write
-        succeeds, and the tombstone sidecar is removed only after the
-        rewrite (which has the tombstones applied) is in place. After
-        the swap ``_index_df`` is re-pointed at the fresh files, which
-        also truncates the accumulated anti-join lineage. The local swap
-        is an rmtree + rename; an object-store deployment would swap a
-        manifest (table format) instead, same ordering."""
-        import shutil
+        The manifest commit is the only step that changes what readers
+        see: a save that fails before it leaves the previous version
+        live. Safe on the SAME directory the instance was loaded from
+        (load -> delete -> re-save): the new files are written beside
+        the old ones, ``_index_df`` is re-pointed at the new segment
+        (which also truncates the accumulated anti-join lineage), and
+        only then does ``prune(keep_versions=1)`` remove the previous
+        version's files."""
         import uuid
 
         os.makedirs(path, exist_ok=True)
@@ -633,20 +614,10 @@ class LSHRS:
             os.path.join(path, "projections.npz"), projections=projection_matrix(self.cfg)
         )
         self.flush()
-
-        def _swap_in(tmp: str, final: str) -> None:
-            shutil.rmtree(final, ignore_errors=True)
-            os.rename(tmp, final)
-
-        if self._index_df is not None:
-            idx_path = os.path.join(path, "index.parquet")
-            tmp = f"{idx_path}.tmp-{uuid.uuid4().hex}"
-            write_index(self._index_df, tmp)
-            _swap_in(tmp, idx_path)
-            self._index_df = read_index(self.spark, idx_path)
+        store = SegmentedIndexStore.create(self.spark, path)
+        vectors = None
         if include_vectors and self._vectors_df is not None:
-            vec_path = os.path.join(path, "vectors.parquet")
-            tmp = f"{vec_path}.tmp-{uuid.uuid4().hex}"
+            vectors = f"vectors/{uuid.uuid4().hex[:16]}"
             (
                 self._vectors_df.select(
                     F.col(self._id_col).cast("long").alias("vec_id"),
@@ -657,12 +628,13 @@ class LSHRS:
                     "vec_id",
                 )
                 .sortWithinPartitions("vec_id")
-                .write.mode("overwrite")
-                .parquet(tmp)
+                .write.parquet(os.path.join(path, vectors))
             )
-            _swap_in(tmp, vec_path)
-        shutil.rmtree(os.path.join(path, "_deleted"), ignore_errors=True)
-        self._saved_path = path
+        store.replace(self._index_df, vectors=vectors)
+        if self._index_df is not None:
+            self._index_df = store.read()
+        store.prune(keep_versions=1)
+        self._store = store
 
     def serve(self, path: Optional[str] = None):
         """Materialize the index for ONLINE serving and return a
@@ -686,25 +658,21 @@ class LSHRS:
     @classmethod
     def load_from_disk(cls, spark: SparkSession, path: str, *,
                        vectors_df: Optional[DataFrame] = None) -> "LSHRS":
+        """Restore a :meth:`save_to_disk` directory: the config from
+        ``config.json`` and the index from the CURRENT manifest version
+        (its segments minus its tombstones). Raises
+        ``FileNotFoundError`` when ``path`` holds no manifest store."""
         with open(os.path.join(path, "config.json")) as f:
             cfg = json.load(f)
+        store = SegmentedIndexStore(spark, path)
         inst = cls(spark, cfg["dim"], num_perm=cfg["num_perm"],
                    num_bands=cfg["num_bands"], rows_per_band=cfg["rows_per_band"],
                    similarity_threshold=cfg["similarity_threshold"],
                    seed=cfg["seed"], dtype=cfg.get("dtype", "float32"),
                    vectors_df=vectors_df)
-        idx_path = os.path.join(path, "index.parquet")
-        if os.path.exists(idx_path):
-            inst._index_df = read_index(spark, idx_path)
-            deleted = os.path.join(path, "_deleted")
-            if os.path.exists(deleted):
-                # apply outstanding tombstones so the loaded in-session
-                # index matches what a tombstone-aware server serves
-                tomb = spark.read.parquet(deleted).select("id").distinct()
-                inst._index_df = inst._index_df.join(
-                    F.broadcast(tomb), "id", "left_anti"
-                ).select("band", "sig", "id")
-        inst._saved_path = path
+        if store.manifest()["segments"]:
+            inst._index_df = store.read()
+        inst._store = store
         return inst
 
     # ------------------------------------------------------------------ #
@@ -743,6 +711,8 @@ class LSHRS:
         self.spark = None
         self._vectors_df = None
         self._index_df = None
+        self._index_rows = None
+        self._store = None
 
     def attach(self, spark: SparkSession,
                vectors_df: Optional[DataFrame] = None) -> "LSHRS":

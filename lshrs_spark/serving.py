@@ -143,8 +143,10 @@ def _drop_deleted(ids: np.ndarray, deleted: Optional[np.ndarray]) -> np.ndarray:
 
 class IndexServer:
     """Driver-local query server over an index written by
-    :func:`~lshrs_spark.operators.index.write_index` (optionally the
-    directory produced by :meth:`LSHRS.save_to_disk`).
+    :func:`~lshrs_spark.operators.index.write_index` or streamed into a
+    directory; such an index has no tombstones. A
+    :meth:`LSHRS.save_to_disk` directory is a manifest store — open it
+    with :meth:`from_saved`.
 
     Implements the reference single-query contract
     (``lshrs/core/main.py:524-658``): :meth:`get_top_k` returns ids
@@ -161,24 +163,16 @@ class IndexServer:
         vectors_path: Optional[str] = None,
         id_col: str = "vec_id",
         vector_col: str = "embedding",
-        deleted_path: Optional[str] = None,
     ) -> None:
         self.cfg = cfg
         self._id_col = id_col
         self._vector_col = vector_col
         self._index_path = index_path
         self._vectors_path = vectors_path
-        self._deleted_path = deleted_path
-        self._ds = self._open_index(index_path)
-        self._vec_ds = (
-            pads.dataset(vectors_path, format="parquet")
-            if vectors_path is not None
-            else None
-        )
-        self._deleted = self._load_deleted()
-        self._warm(self._ds)
-        if self._vec_ds is not None:
-            self._warm(self._vec_ds)
+        # sorted int64 tombstoned ids, or None — only a manifest store
+        # (SegmentedIndexServer) has tombstones
+        self._deleted: Optional[np.ndarray] = None
+        self.refresh()
 
     def refresh(self) -> None:
         """Re-discover the index (and vector) files and re-warm footer
@@ -187,41 +181,26 @@ class IndexServer:
         streamed (unsorted, unpartitioned) layout serves correctly —
         equality filters are exact regardless of layout — just with
         weaker row-group pruning until `compact_index` rewrites it into
-        the sorted hive form. Also re-reads the ``_deleted`` tombstone
-        sidecar, making :meth:`LSHRS.delete` tombstones visible without
-        a full re-save."""
+        the sorted hive form."""
         self._ds = self._open_index(self._index_path)
         self._warm(self._ds)
+        self._vec_ds = None
         if self._vectors_path is not None:
             self._vec_ds = pads.dataset(self._vectors_path, format="parquet")
             self._warm(self._vec_ds)
-        self._deleted = self._load_deleted()
-
-    def _load_deleted(self) -> Optional[np.ndarray]:
-        """Tombstoned ids (sorted int64) from the ``_deleted`` sidecar,
-        or ``None`` when no tombstones exist. :meth:`LSHRS.delete`
-        appends one small parquet file per delete batch; the index
-        parquet itself is immutable until the next save/compact."""
-        return _read_tombstones(self._deleted_path)
 
     @classmethod
     def from_saved(cls, path: str, **kw) -> "IndexServer":
-        """Open a :meth:`LSHRS.save_to_disk` directory: ``config.json`` +
-        ``index.parquet`` (+ ``vectors.parquet`` when saved with
-        ``include_vectors=True``, + ``_deleted`` tombstones). ``path``
-        may be any pyarrow-supported URI (local, s3://, hdfs://, ...)."""
+        """Open a :meth:`LSHRS.save_to_disk` directory: ``config.json``
+        for the config, and a :class:`SegmentedIndexServer` over the
+        directory's manifest store for the segments, tombstones and
+        vectors (a top-p rerank needs a save with
+        ``include_vectors=True``). ``path`` may be any pyarrow-supported
+        URI (local, s3://, hdfs://, ...)."""
         filesystem, root = _fs_and_path(path)
         with filesystem.open_input_stream(f"{root}/config.json") as f:
             cfg = LSHConfig.from_dict(json.load(f))
-        from pyarrow import fs as pafs
-
-        has_vecs = (
-            filesystem.get_file_info(f"{root}/vectors.parquet").type
-            != pafs.FileType.NotFound
-        )
-        kw.setdefault("vectors_path", f"{path}/vectors.parquet" if has_vecs else None)
-        kw.setdefault("deleted_path", f"{path}/_deleted")
-        return cls(f"{path}/index.parquet", cfg, **kw)
+        return SegmentedIndexServer(path, cfg, **kw)
 
     # ------------------------------------------------------------------ #
     # dataset plumbing
@@ -281,7 +260,7 @@ class IndexServer:
     def candidate_counts(self, vector: np.ndarray,
                          multiprobe: int = 0) -> tuple[np.ndarray, np.ndarray]:
         """``(ids, collisions)`` for one query vector — Q1+Q2 driver-side.
-        Tombstoned ids (``_deleted`` sidecar) are filtered out, so a
+        Tombstoned ids (manifest tombstones) are filtered out, so a
         delete is visible after :meth:`refresh` without re-saving.
         With ``multiprobe``, a perturbed-bucket match counts as a
         collision like any exact-bucket match."""
@@ -1221,24 +1200,43 @@ class IVFPQServer:
 
 class SegmentedIndexServer(IndexServer):
     """:class:`IndexServer` over a :class:`~lshrs_spark.store.
-    SegmentedIndexStore` root: segments resolve through the CURRENT
-    manifest into one pyarrow union dataset (per-segment hive/row-group
-    pruning intact), manifest tombstones become the serving-side delete
-    filter, and :meth:`refresh` re-reads the manifest — so the server
-    follows store commits (append / delete_ids / compact) without
-    restarts, and never lists directories (manifest-only discovery, the
-    property that makes it object-store safe)."""
+    SegmentedIndexStore` root (which is also what
+    :meth:`LSHRS.save_to_disk` writes): segments resolve through the
+    CURRENT manifest into one pyarrow union dataset (per-segment
+    hive/row-group pruning intact), manifest tombstones become the
+    serving-side delete filter, and the manifest's ``vectors`` directory
+    (when set) is the rerank table. :meth:`refresh` re-reads the
+    manifest — so the server follows store commits (append / delete_ids
+    / compact / re-save) without restarts, and never lists directories
+    (manifest-only discovery, the property that makes it object-store
+    safe)."""
 
-    def __init__(self, store_root: str, cfg: LSHConfig, **kw) -> None:
-        kw.setdefault("deleted_path", None)
-        super().__init__(store_root, cfg, **kw)
+    def __init__(self, store_root: str, cfg: LSHConfig, *,
+                 id_col: str = "vec_id",
+                 vector_col: str = "embedding") -> None:
+        super().__init__(store_root, cfg, id_col=id_col,
+                         vector_col=vector_col)
 
-    def _open_index(self, root: str) -> pads.Dataset:  # type: ignore[override]
+    def refresh(self) -> None:
+        root = self._index_path
         filesystem, p = _fs_and_path(root)
         with filesystem.open_input_stream(f"{p}/manifest/CURRENT") as f:
             v = int(f.read().decode().strip())
         with filesystem.open_input_stream(f"{p}/manifest/v_{v}.json") as f:
             self._manifest = json.load(f)
+        vectors = self._manifest.get("vectors")
+        self._vectors_path = None if vectors is None else f"{root}/{vectors}"
+        super().refresh()
+        ids = [
+            arr for arr in (_read_tombstones(f"{root}/{t}")
+                            for t in self._manifest["tombstones"])
+            if arr is not None
+        ]
+        self._deleted = (
+            np.unique(np.concatenate(ids)).astype(np.int64) if ids else None
+        )
+
+    def _open_index(self, root: str) -> pads.Dataset:  # type: ignore[override]
         children = [
             pads.dataset(f"{root}/{s}", format="parquet", partitioning="hive")
             for s in self._manifest["segments"]
@@ -1252,16 +1250,6 @@ class SegmentedIndexServer(IndexServer):
                 })
             )
         return children[0] if len(children) == 1 else pads.dataset(children)
-
-    def _load_deleted(self) -> Optional[np.ndarray]:  # type: ignore[override]
-        ids: list[np.ndarray] = []
-        for t in self._manifest.get("tombstones", []):
-            arr = _read_tombstones(f"{self._index_path}/{t}")
-            if arr is not None:
-                ids.append(arr)
-        if not ids:
-            return None
-        return np.unique(np.concatenate(ids)).astype(np.int64)
 
 
 class BM25Server:

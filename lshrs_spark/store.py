@@ -7,16 +7,25 @@ Iceberg snapshots) is the one that works at 100 TB:
 * every ingest batch becomes a new IMMUTABLE segment directory (each in
   the probe-optimal ``write_index`` layout, so row-group pruning holds
   per segment);
-* deletes append id-tombstone files — no segment is ever rewritten in
-  place;
+* deletes add an id-tombstone directory (one parquet file, written
+  in-process with pyarrow) — no segment is ever rewritten in place;
 * a JSON **manifest per version** lists exactly which segment and
-  tombstone files make up that snapshot. Commit = write manifest
+  tombstone directories make up that snapshot, plus an optional
+  ``vectors`` directory (the id-sorted vector table a server reranks
+  against; ``None`` when none was saved). Commit = write manifest
   ``v_{N+1}.json`` + flip the ``CURRENT`` pointer; readers that pinned
   version N keep an immutable, consistent view (time travel) because
   nothing they reference is ever mutated;
 * ``compact()`` merges the live view into one fresh segment and commits
   a manifest that references only it — old versions stay readable until
   ``prune()`` reclaims unreferenced directories.
+
+This is also the on-disk format of a saved ``LSHRS`` index:
+``save_to_disk`` commits a version holding one fresh segment (and the
+vectors), ``delete`` adds tombstones, and ``load_from_disk`` and
+``IndexServer.from_saved`` read the CURRENT manifest. A save that dies
+before its commit leaves the previous version live; its half-written
+directories are unreferenced and the next ``prune()`` removes them.
 
 Single-writer by design (ingest pipelines serialize commits); the
 commit itself is one small JSON file + pointer flip — on a real object
@@ -33,10 +42,12 @@ import shutil
 import uuid
 from typing import Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.index import write_index
+from .operators.index import read_index, write_index
 
 __all__ = ["SegmentedIndexStore"]
 
@@ -71,7 +82,8 @@ class SegmentedIndexStore:
         store = object.__new__(cls)
         store.spark, store.root = spark, root
         if not os.path.exists(store._current_path):
-            store._commit({"version": 0, "segments": [], "tombstones": []})
+            store._commit({"version": 0, "segments": [], "tombstones": [],
+                           "vectors": None})
         return store
 
     # ---------------------------------------------------------- manifest
@@ -109,6 +121,12 @@ class SegmentedIndexStore:
         os.replace(tmp2, self._current_path)  # object store: conditional put
         return v
 
+    def _commit_next(self, m: dict, **changes) -> int:
+        """Commit manifest ``m`` with ``changes`` applied as the next
+        version; every entry not named (``vectors`` included) carries
+        forward unchanged."""
+        return self._commit({**m, **changes, "version": m["version"] + 1})
+
     # ------------------------------------------------------------ writes
     def append(self, index_df: DataFrame, **write_kw) -> int:
         """Commit one ingest batch as a new immutable segment; returns
@@ -118,11 +136,7 @@ class SegmentedIndexStore:
         seg = f"segments/{uuid.uuid4().hex[:16]}"
         write_index(index_df, os.path.join(self.root, seg), **write_kw)
         m = self.manifest()
-        return self._commit({
-            "version": m["version"] + 1,
-            "segments": m["segments"] + [seg],
-            "tombstones": m["tombstones"],
-        })
+        return self._commit_next(m, segments=m["segments"] + [seg])
 
     def append_epoch(self, index_df: DataFrame, epoch_id: int,
                      **write_kw) -> int:
@@ -136,87 +150,100 @@ class SegmentedIndexStore:
         m = self.manifest()
         if seg in m["segments"]:
             return m["version"]
-        return self._commit({
-            "version": m["version"] + 1,
-            "segments": m["segments"] + [seg],
-            "tombstones": m["tombstones"],
-        })
+        return self._commit_next(m, segments=m["segments"] + [seg])
 
     def delete_ids(self, ids: Sequence[int]) -> int:
-        """Commit a tombstone file for ``ids``; no segment is touched."""
+        """Commit a tombstone for ``ids``; no segment is touched. The ids
+        are written in-process with pyarrow as one parquet file in a
+        fresh ``tombstones/<uuid>/`` directory — no Spark job."""
         ts = f"tombstones/{uuid.uuid4().hex[:16]}"
-        self.spark.createDataFrame(
-            [(int(i),) for i in ids], "id long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.root, ts)
+        os.makedirs(os.path.join(self.root, ts))
+        pq.write_table(
+            pa.table({"id": pa.array([int(i) for i in ids], pa.int64())}),
+            os.path.join(self.root, ts, "part-0.parquet"),
         )
         m = self.manifest()
-        return self._commit({
-            "version": m["version"] + 1,
-            "segments": m["segments"],
-            "tombstones": m["tombstones"] + [ts],
-        })
+        return self._commit_next(m, tombstones=m["tombstones"] + [ts])
+
+    def replace(self, index_df: Optional[DataFrame], *,
+                vectors: Optional[str] = None, **write_kw) -> int:
+        """Commit ``index_df`` as the whole live view: ONE fresh segment
+        (none when ``index_df`` is None), no tombstones, and ``vectors``
+        as the vector directory. Nothing live is touched before the
+        commit, so ``index_df`` may itself read from this store."""
+        segments = []
+        if index_df is not None:
+            segments = [f"segments/{uuid.uuid4().hex[:16]}"]
+            write_index(index_df, os.path.join(self.root, segments[0]),
+                        **write_kw)
+        return self._commit_next(self.manifest(), segments=segments,
+                                 tombstones=[], vectors=vectors)
 
     # ------------------------------------------------------------- reads
     def read(self, version: Optional[int] = None) -> DataFrame:
         """The live bucket table at a version (default: current):
         union of that manifest's segments minus its tombstones. The
         union is segment-pruned per probe exactly like a single
-        directory; the anti-join's tombstone side is tiny (ids only)
-        and broadcasts. Plan size grows with the segment count — run
-        :meth:`compact` on the usual LSM cadence (e.g. when segments
-        exceed a few hundred) to fold the union back to one input."""
+        directory; all tombstones are read as ONE ids-only relation and
+        applied as one broadcast anti-join. With one segment and no
+        tombstones the plan is exactly ``read_index(segment)``. Plan
+        size grows with the segment count — run :meth:`compact` on the
+        usual LSM cadence (e.g. when segments exceed a few hundred) to
+        fold the union back to one input."""
         m = self.manifest(version)
         if not m["segments"]:
             return self.spark.createDataFrame(
                 [], "band int, sig long, id long"
             )
-        parts = [
-            self.spark.read.parquet(os.path.join(self.root, s))
-            .select("band", "sig", "id")
-            for s in m["segments"]
-        ]
+        parts = [read_index(self.spark, os.path.join(self.root, s))
+                 for s in m["segments"]]
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        for t in m["tombstones"]:
-            dead = self.spark.read.parquet(os.path.join(self.root, t))
-            df = df.join(F.broadcast(dead), "id", "left_anti")
-        return df.select("band", "sig", "id")
+        if m["tombstones"]:
+            dead = self.spark.read.schema("id long").parquet(
+                *(os.path.join(self.root, t) for t in m["tombstones"])
+            )
+            df = df.join(F.broadcast(dead), "id", "left_anti").select(
+                "band", "sig", "id"
+            )
+        return df
 
     # ------------------------------------------------------ maintenance
     def compact(self, **write_kw) -> int:
         """Merge the current view into ONE fresh segment (tombstones
         applied, probe-optimal layout restored across segment
-        boundaries) and commit a manifest referencing only it. Old
-        versions keep reading their old segments until :meth:`prune`."""
-        seg = f"segments/{uuid.uuid4().hex[:16]}"
-        write_index(self.read(), os.path.join(self.root, seg), **write_kw)
+        boundaries) and commit a manifest referencing only it and the
+        same vectors. Old versions keep reading their old segments
+        until :meth:`prune`."""
         m = self.manifest()
-        return self._commit({
-            "version": m["version"] + 1,
-            "segments": [seg],
-            "tombstones": [],
-        })
+        return self.replace(self.read() if m["segments"] else None,
+                            vectors=m.get("vectors"), **write_kw)
 
     def prune(self, keep_versions: int = 1) -> list[str]:
         """Reclaim storage: drop all but the newest ``keep_versions``
-        manifests and delete every segment/tombstone directory no kept
+        committed manifests (and any uncommitted one past CURRENT) and
+        delete every segment/tombstone/vectors directory no kept
         manifest references. Returns the deleted paths."""
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        keep = self.versions()[-keep_versions:]
+        cur = self.current_version()
+        keep = [v for v in self.versions() if v <= cur][-keep_versions:]
         live: set[str] = set()
         for v in keep:
             m = self.manifest(v)
             live.update(m["segments"])
             live.update(m["tombstones"])
+            if m.get("vectors"):
+                live.add(m["vectors"])
         deleted = []
         for v in self.versions():
             if v not in keep:
                 os.remove(self._manifest_path(v))
-        for kind in ("segments", "tombstones"):
+        for kind in ("segments", "tombstones", "vectors"):
             base = os.path.join(self.root, kind)
+            if not os.path.isdir(base):
+                continue
             for name in os.listdir(base):
                 rel = f"{kind}/{name}"
                 if rel not in live:

@@ -27,27 +27,8 @@ def small_vectors(rng):
 
 
 def load_reference_hasher():
-    """Load the reference's pure-numpy hash module directly from
-    /root/reference (read-only) for differential tests, without importing
-    the redis-dependent package root."""
-    import importlib.util
-    import sys
-    import types
+    """The reference's SRP hasher, as transcribed test-only in
+    ``tests/reference_transcription.py`` (independent of lshrs_spark)."""
+    from tests import reference_transcription
 
-    if "lshrs.hash.lsh" in sys.modules:
-        return sys.modules["lshrs.hash.lsh"]
-    for name in ("lshrs", "lshrs._config", "lshrs.hash"):
-        if name not in sys.modules:
-            m = types.ModuleType(name)
-            m.__path__ = []
-            sys.modules[name] = m
-
-    def load(name, path):
-        spec = importlib.util.spec_from_file_location(name, path)
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules[name] = mod
-        spec.loader.exec_module(mod)
-        return mod
-
-    load("lshrs._config.config", "/root/reference/lshrs/_config/config.py")
-    return load("lshrs.hash.lsh", "/root/reference/lshrs/hash/lsh.py")
+    return reference_transcription

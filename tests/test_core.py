@@ -148,10 +148,10 @@ def test_save_load_round_trip(make_lsh, small_vectors, tmp_path, spark):
 
 def test_load_delete_resave_same_path(make_lsh, small_vectors, tmp_path, spark):
     """load -> delete -> re-save to the SAME directory must not yank the
-    ``_deleted`` sidecar (or the index parquet) out from under the loaded
+    tombstones (or the index segment) out from under the loaded
     instance's lazy plan (ADVICE r3: the old upfront rmtree broke this
     cycle with FileNotFoundException)."""
-    import os
+    from lshrs_spark.store import SegmentedIndexStore
 
     ids, vecs = small_vectors
     lsh = make_lsh(seed=7)
@@ -161,10 +161,10 @@ def test_load_delete_resave_same_path(make_lsh, small_vectors, tmp_path, spark):
 
     loaded = LSHRS.load_from_disk(spark, path)
     loaded.delete([3, 4])
-    assert os.path.exists(os.path.join(path, "_deleted"))
+    assert SegmentedIndexStore(spark, path).manifest()["tombstones"]
     loaded.save_to_disk(path)  # rewrite in place, tombstones applied
 
-    assert not os.path.exists(os.path.join(path, "_deleted"))
+    assert SegmentedIndexStore(spark, path).manifest()["tombstones"] == []
     again = LSHRS.load_from_disk(spark, path)
     surviving = {r.id for r in again._index_df.select("id").distinct().collect()}
     assert surviving == set(ids) - {3, 4}

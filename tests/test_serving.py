@@ -14,6 +14,15 @@ from lshrs_spark.core import LSHRS
 from lshrs_spark.operators.probe import candidates_from_path
 from lshrs_spark.operators.probe import top_k as probe_top_k
 from lshrs_spark.serving import IndexServer
+from lshrs_spark.store import SegmentedIndexStore
+
+
+def _segment_path(spark, path):
+    """The one index segment a ``save_to_disk`` directory's CURRENT
+    manifest names — the plain ``write_index`` directory the Spark
+    probe reads."""
+    (seg,) = SegmentedIndexStore(spark, path).manifest()["segments"]
+    return os.path.join(path, seg)
 
 
 @pytest.fixture(scope="module")
@@ -37,7 +46,7 @@ def test_topk_matches_spark_probe(spark, saved_index):
         srv = IndexServer.from_saved(path)
         served = srv.get_top_k(q, 10)
         cands = candidates_from_path(
-            spark, os.path.join(path, "index.parquet"), q, lsh.cfg
+            spark, _segment_path(spark, path), q, lsh.cfg
         )
         via_spark = [
             r.id
@@ -277,7 +286,7 @@ def test_serving_binary_signatures(spark, tmp_path):
         want = [
             r.id for r in probe_top_k(
                 candidates_from_path(
-                    spark, os.path.join(path, "index.parquet"), vecs[i], lsh.cfg
+                    spark, _segment_path(spark, path), vecs[i], lsh.cfg
                 ), 5
             ).orderBy("rank").select("id").collect()
         ]
@@ -286,9 +295,9 @@ def test_serving_binary_signatures(spark, tmp_path):
 
 def test_delete_tombstones_visible_after_refresh(spark, tmp_path):
     """VERDICT r2 #4: a LSHRS.delete() on an index bound to a saved dir
-    writes _deleted tombstones; a live IndexServer stops serving those
-    ids at refresh(), with no full re-save; a later save_to_disk clears
-    the sidecar."""
+    commits manifest tombstones; a live IndexServer stops serving those
+    ids at refresh(), with no full re-save; a later save_to_disk commits
+    a version without tombstones."""
     rng = np.random.default_rng(17)
     n, d = 400, 16
     vecs = rng.standard_normal((n, d)).astype(np.float32)
@@ -302,6 +311,7 @@ def test_delete_tombstones_visible_after_refresh(spark, tmp_path):
     assert 7 in srv.get_top_k(q, 5)            # exact match serves itself
 
     lsh.delete([7])
+    assert SegmentedIndexStore(spark, path).manifest()["tombstones"]
     assert 7 in srv.get_top_k(q, 5)            # stale until refresh
     srv.refresh()
     assert 7 not in srv.get_top_k(q, 500)      # gone even with a huge k
@@ -317,12 +327,67 @@ def test_delete_tombstones_visible_after_refresh(spark, tmp_path):
         r.id for r in reloaded.index_df.select("id").distinct().collect()
     ]
 
-    # a fresh save has the delete applied -> sidecar cleared
+    # a fresh save has the delete applied -> no tombstones
     lsh.save_to_disk(path, include_vectors=True)
-    assert not os.path.exists(os.path.join(path, "_deleted"))
+    assert SegmentedIndexStore(spark, path).manifest()["tombstones"] == []
     srv2 = IndexServer.from_saved(path)
     assert srv2._deleted is None
     assert 7 not in srv2.get_top_k(q, 500)
+
+
+def test_save_crash_before_commit_keeps_previous_version(
+        spark, tmp_path, monkeypatch):
+    """A save that dies after writing its segment and vectors but before
+    the manifest commit leaves the previous version live: the loaded
+    index and a fresh server answer as before, top-p reranks included,
+    and a later prune() removes the orphaned directories."""
+    rng = np.random.default_rng(31)
+    n, d = 400, 16
+    vecs = rng.standard_normal((n, d)).astype(np.float32)
+    lsh = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4)
+    lsh.index(list(range(n)), vecs)
+    path = str(tmp_path / "idx")
+    lsh.save_to_disk(path, include_vectors=True)
+    qs = [vecs[i] for i in (3, 50, 211)]
+    want_k = [lsh.get_top_k(q, 5) for q in qs]
+    want_p = [lsh.query(q, top_k=5, top_p=0.5) for q in qs]
+    kept = {kind: set(os.listdir(os.path.join(path, kind)))
+            for kind in ("segments", "vectors")}
+
+    def crash(self, manifest):
+        raise OSError("crash before the manifest commit")
+
+    other = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4)
+    other.index(list(range(n)), -vecs)
+    monkeypatch.setattr(SegmentedIndexStore, "_commit", crash)
+    with pytest.raises(OSError, match="crash before"):
+        other.save_to_disk(path, include_vectors=True)
+    monkeypatch.undo()
+    orphans = {kind: set(os.listdir(os.path.join(path, kind))) - kept[kind]
+               for kind in kept}
+    assert all(len(o) == 1 for o in orphans.values())   # both were written
+
+    store = SegmentedIndexStore(spark, path)
+    loaded = LSHRS.load_from_disk(
+        spark, path,
+        vectors_df=spark.read.parquet(
+            os.path.join(path, store.manifest()["vectors"])),
+    )
+    srv = IndexServer.from_saved(path)
+    for q, k, p in zip(qs, want_k, want_p):
+        assert loaded.get_top_k(q, 5) == k
+        assert srv.get_top_k(q, 5) == k
+        for got in (loaded.query(q, top_k=5, top_p=0.5),
+                    srv.query(q, top_k=5, top_p=0.5)):
+            assert [i for i, _ in got] == [i for i, _ in p]
+            assert all(abs(a - b) < 1e-5 for (_, a), (_, b) in zip(got, p))
+
+    deleted = store.prune()
+    assert sorted(deleted) == sorted(
+        f"{kind}/{name}" for kind, names in orphans.items() for name in names
+    )
+    for kind in kept:
+        assert set(os.listdir(os.path.join(path, kind))) == kept[kind]
 
 
 def test_ivf_delete_tombstones_visible_after_refresh(spark, tmp_path):

@@ -62,24 +62,15 @@ def test_postgres_requires_connection_info(spark):
 
 # --------------------------------------------------------------------- #
 # Postgres cell decoding parity (reference _coerce_vector,
-# lshrs/io/postgres.py:186-208) — differential against the reference's
-# own function, loaded read-only from /root/reference.
+# lshrs/io/postgres.py:186-208) — differential against the test-only
+# transcription in tests/reference_transcription.py.
 # --------------------------------------------------------------------- #
-
-def _load_reference_coerce():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "ref_pg", "/root/reference/lshrs/io/postgres.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod._coerce_vector
-
 
 @pytest.fixture(scope="module")
 def ref_coerce():
-    return _load_reference_coerce()
+    from tests.reference_transcription import coerce_vector
+
+    return coerce_vector
 
 
 def test_bytea_decode_matches_reference(spark, ref_coerce):
@@ -111,13 +102,18 @@ def test_text_decode_matches_reference(spark, ref_coerce):
     from lshrs_spark.sources.jdbc import decode_vector_column
 
     cells = ["{1,2,3}", "[1.5, -2.25, 3e2]", "(0.125,7,8)", "{ 4 , 5 }"]
+    # SURVEY pins only the "{...}" literal; the bracket and paren forms
+    # are checked against explicit arrays
+    explicit = {"[1.5, -2.25, 3e2]": [1.5, -2.25, 300.0],
+                "(0.125,7,8)": [0.125, 7.0, 8.0]}
     df = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cells)], "id long, embedding string"
     )
     out = {r.id: r.embedding for r in
            decode_vector_column(df, "embedding").collect()}
     for i, c in enumerate(cells):
-        want = ref_coerce(c)
+        want = (np.array(explicit[c], dtype=np.float32) if c in explicit
+                else ref_coerce(c))
         assert np.allclose(np.array(out[i], dtype=np.float32), want), c
 
 

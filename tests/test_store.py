@@ -183,8 +183,68 @@ def test_commit_is_atomic_under_partial_failure(spark, tmp_path, rng):
     reader = SegmentedIndexStore(spark, root)
     assert reader.current_version() == 1          # old snapshot intact
     assert reader.read().count() == idx.count()   # and fully readable
+    # prune keeps the committed version, not the newer orphan manifest
+    reader.prune(keep_versions=1)
+    assert reader.versions() == [1]
+    assert reader.read().count() == idx.count()
     # the next real commit supersedes the orphaned manifest
     idx2, _ = _batch(spark, rng, list(range(5, 8)))
     v = reader.append(idx2)
     assert v == 2  # overwrites the orphan atomically (os.replace)
     assert reader.read().count() == idx.count() + idx2.count()
+
+
+def test_delete_ids_runs_no_spark_job(spark, tmp_path, rng):
+    """delete_ids writes its tombstone in-process — no Spark job under
+    the caller's job group — and a server drops the ids on refresh()."""
+    import uuid
+
+    from lshrs_spark.serving import SegmentedIndexServer
+
+    root = str(tmp_path / "store")
+    st = SegmentedIndexStore.create(spark, root)
+    idx, vecs = _batch(spark, rng, list(range(20)))
+    st.append(idx)
+    srv = SegmentedIndexServer(root, CFG)
+    assert 4 in srv.candidate_counts(vecs[4])[0]
+
+    sc = spark.sparkContext
+    group = f"delete-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "delete_ids")
+    try:
+        st.delete_ids([4, 9])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    srv.refresh()
+    for i in (4, 9):
+        assert i not in srv.candidate_counts(vecs[i])[0]
+        assert i not in srv.get_top_k(vecs[i], 20)
+
+
+def test_read_plans_one_tombstone_relation(spark, tmp_path, rng):
+    """One segment and no tombstones plans exactly like read_index; any
+    number of tombstones is ONE ids-only scan and ONE anti-join."""
+    import re
+
+    from lshrs_spark.operators.index import read_index
+
+    def plan(df):
+        return re.sub(r"#\d+L?", "",
+                      df._jdf.queryExecution().optimizedPlan().toString())
+
+    root = str(tmp_path / "store")
+    st = SegmentedIndexStore.create(spark, root)
+    idx, _ = _batch(spark, rng, list(range(20)))
+    st.append(idx)
+    (seg,) = st.manifest()["segments"]
+    assert plan(st.read()) == plan(read_index(spark, os.path.join(root, seg)))
+
+    for ids in ([1], [2, 3], [4]):
+        st.delete_ids(ids)
+    p = plan(st.read())
+    assert p.count("LeftAnti") == 1
+    assert p.count("Relation [id]") == 1
+    assert {r.id for r in st.read().select("id").distinct().collect()} \
+        == set(range(20)) - {1, 2, 3, 4}
