@@ -583,41 +583,36 @@ class LSHRS:
     # ------------------------------------------------------------------ #
 
     def save_to_disk(self, path: str, *, include_vectors: bool = False) -> None:
-        """Config JSON + projections npz + the index as a
-        :class:`~lshrs_spark.store.SegmentedIndexStore` root
-        (``main.py:846-895``; no secrets to redact — there is no Redis
-        password here).
+        """Save the index as a :class:`~lshrs_spark.store.
+        SegmentedIndexStore` root (``main.py:846-895``; no secrets to
+        redact — there is no Redis password here).
 
-        The index is written as ONE fresh segment and committed as a new
-        manifest version with no tombstones (deletions are already
-        applied to it). ``include_vectors=True`` additionally writes the
-        registered vector table sorted by id into a fresh ``vectors/``
-        directory named by that manifest, so the no-Spark-job
-        :class:`~lshrs_spark.serving.IndexServer` can serve rerank/top-p
-        queries with id-pruned reads; otherwise the version has no
-        vectors.
+        The index is written as ONE fresh segment and committed, with
+        the config, as a new manifest version with no tombstones
+        (deletions are already applied to it). ``include_vectors=True``
+        additionally writes the registered vector table sorted by id
+        into a fresh ``vectors/`` directory named by that manifest, so
+        the no-Spark-job :class:`~lshrs_spark.serving.IndexServer` can
+        serve rerank/top-p queries with id-pruned reads; a save that
+        writes no vectors keeps the previous version's vectors.
 
         The manifest commit is the only step that changes what readers
-        see: a save that fails before it leaves the previous version
-        live. Safe on the SAME directory the instance was loaded from
-        (load -> delete -> re-save): the new files are written beside
-        the old ones, ``_index_df`` is re-pointed at the new segment
-        (which also truncates the accumulated anti-join lineage), and
-        only then does ``prune(keep_versions=1)`` remove the previous
-        version's files."""
+        see: a save that fails before it leaves the previous version —
+        config included — live. ``config.json`` and ``projections.npz``
+        are copies of the committed config for outside readers, each
+        replaced atomically after the commit. Safe on the SAME directory
+        the instance was loaded from (load -> delete -> re-save): the
+        new files are written beside the old ones, ``_index_df`` is
+        re-pointed at the new segment (which also truncates the
+        accumulated anti-join lineage), and only then does
+        ``prune(keep_versions=1)`` remove the previous version's files."""
         import uuid
 
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "config.json"), "w") as f:
-            json.dump(self.cfg.to_dict(), f, indent=2)
-        np.savez_compressed(
-            os.path.join(path, "projections.npz"), projections=projection_matrix(self.cfg)
-        )
         self.flush()
         store = SegmentedIndexStore.create(self.spark, path)
-        vectors = None
+        entries = {"config": self.cfg.to_dict()}
         if include_vectors and self._vectors_df is not None:
-            vectors = f"vectors/{uuid.uuid4().hex[:16]}"
+            entries["vectors"] = f"vectors/{uuid.uuid4().hex[:16]}"
             (
                 self._vectors_df.select(
                     F.col(self._id_col).cast("long").alias("vec_id"),
@@ -628,9 +623,17 @@ class LSHRS:
                     "vec_id",
                 )
                 .sortWithinPartitions("vec_id")
-                .write.parquet(os.path.join(path, vectors))
+                .write.parquet(os.path.join(path, entries["vectors"]))
             )
-        store.replace(self._index_df, vectors=vectors)
+        store.replace(self._index_df, entries)
+        with open(os.path.join(path, "config.json.tmp"), "w") as f:
+            json.dump(entries["config"], f, indent=2)
+        os.replace(os.path.join(path, "config.json.tmp"),
+                   os.path.join(path, "config.json"))
+        np.savez_compressed(os.path.join(path, "projections.tmp.npz"),
+                            projections=projection_matrix(self.cfg))
+        os.replace(os.path.join(path, "projections.tmp.npz"),
+                   os.path.join(path, "projections.npz"))
         if self._index_df is not None:
             self._index_df = store.read()
         store.prune(keep_versions=1)
@@ -658,13 +661,12 @@ class LSHRS:
     @classmethod
     def load_from_disk(cls, spark: SparkSession, path: str, *,
                        vectors_df: Optional[DataFrame] = None) -> "LSHRS":
-        """Restore a :meth:`save_to_disk` directory: the config from
-        ``config.json`` and the index from the CURRENT manifest version
-        (its segments minus its tombstones). Raises
-        ``FileNotFoundError`` when ``path`` holds no manifest store."""
-        with open(os.path.join(path, "config.json")) as f:
-            cfg = json.load(f)
+        """Restore a :meth:`save_to_disk` directory from its CURRENT
+        manifest version: the config, and the index as its segments
+        minus its tombstones. Raises ``FileNotFoundError`` when
+        ``path`` holds no manifest store."""
         store = SegmentedIndexStore(spark, path)
+        cfg = store.manifest()["config"]
         inst = cls(spark, cfg["dim"], num_perm=cfg["num_perm"],
                    num_bands=cfg["num_bands"], rows_per_band=cfg["rows_per_band"],
                    similarity_threshold=cfg["similarity_threshold"],

@@ -190,17 +190,16 @@ class IndexServer:
             self._warm(self._vec_ds)
 
     @classmethod
-    def from_saved(cls, path: str, **kw) -> "IndexServer":
-        """Open a :meth:`LSHRS.save_to_disk` directory: ``config.json``
-        for the config, and a :class:`SegmentedIndexServer` over the
-        directory's manifest store for the segments, tombstones and
-        vectors (a top-p rerank needs a save with
-        ``include_vectors=True``). ``path`` may be any pyarrow-supported
-        URI (local, s3://, hdfs://, ...)."""
-        filesystem, root = _fs_and_path(path)
-        with filesystem.open_input_stream(f"{root}/config.json") as f:
-            cfg = LSHConfig.from_dict(json.load(f))
-        return SegmentedIndexServer(path, cfg, **kw)
+    def from_saved(cls, path: str, *, id_col: str = "vec_id",
+                   vector_col: str = "embedding") -> "IndexServer":
+        """Open a :meth:`LSHRS.save_to_disk` directory as a
+        :class:`SegmentedIndexServer`: config, segments, tombstones and
+        vectors all come from the directory's CURRENT manifest (a top-p
+        rerank needs a save with ``include_vectors=True``), so there is
+        no ``vectors_path`` argument. ``path`` may be any
+        pyarrow-supported URI (local, s3://, hdfs://, ...)."""
+        return SegmentedIndexServer(path, None, id_col=id_col,
+                                    vector_col=vector_col)
 
     # ------------------------------------------------------------------ #
     # dataset plumbing
@@ -1209,9 +1208,12 @@ class SegmentedIndexServer(IndexServer):
     manifest — so the server follows store commits (append / delete_ids
     / compact / re-save) without restarts, and never lists directories
     (manifest-only discovery, the property that makes it object-store
-    safe)."""
+    safe). A manifest that carries a ``config`` (every
+    :meth:`LSHRS.save_to_disk` version) sets :attr:`cfg` at open and on
+    each refresh, so a re-save with another config is followed too;
+    ``cfg=None`` requires one."""
 
-    def __init__(self, store_root: str, cfg: LSHConfig, *,
+    def __init__(self, store_root: str, cfg: Optional[LSHConfig], *,
                  id_col: str = "vec_id",
                  vector_col: str = "embedding") -> None:
         super().__init__(store_root, cfg, id_col=id_col,
@@ -1224,6 +1226,10 @@ class SegmentedIndexServer(IndexServer):
             v = int(f.read().decode().strip())
         with filesystem.open_input_stream(f"{p}/manifest/v_{v}.json") as f:
             self._manifest = json.load(f)
+        if "config" in self._manifest:
+            self.cfg = LSHConfig.from_dict(self._manifest["config"])
+        elif self.cfg is None:
+            raise ValueError(f"the manifest at {root!r} has no config")
         vectors = self._manifest.get("vectors")
         self._vectors_path = None if vectors is None else f"{root}/{vectors}"
         super().refresh()

@@ -12,18 +12,20 @@ Iceberg snapshots) is the one that works at 100 TB:
 * a JSON **manifest per version** lists exactly which segment and
   tombstone directories make up that snapshot, plus an optional
   ``vectors`` directory (the id-sorted vector table a server reranks
-  against; ``None`` when none was saved). Commit = write manifest
-  ``v_{N+1}.json`` + flip the ``CURRENT`` pointer; readers that pinned
-  version N keep an immutable, consistent view (time travel) because
-  nothing they reference is ever mutated;
+  against; ``None`` when none was saved) and, for a saved ``LSHRS``
+  index, the ``config`` its segments were hashed with. Commit = write
+  manifest ``v_{N+1}.json`` + flip the ``CURRENT`` pointer; readers
+  that pinned version N keep an immutable, consistent view (time
+  travel) because nothing they reference is ever mutated;
 * ``compact()`` merges the live view into one fresh segment and commits
   a manifest that references only it — old versions stay readable until
   ``prune()`` reclaims unreferenced directories.
 
 This is also the on-disk format of a saved ``LSHRS`` index:
-``save_to_disk`` commits a version holding one fresh segment (and the
-vectors), ``delete`` adds tombstones, and ``load_from_disk`` and
-``IndexServer.from_saved`` read the CURRENT manifest. A save that dies
+``save_to_disk`` commits a version holding one fresh segment, the
+config and the vectors, ``delete`` adds tombstones, and
+``load_from_disk`` and ``IndexServer.from_saved`` read config, segments,
+tombstones and vectors from the CURRENT manifest. A save that dies
 before its commit leaves the previous version live; its half-written
 directories are unreferenced and the next ``prune()`` removes them.
 
@@ -165,19 +167,20 @@ class SegmentedIndexStore:
         m = self.manifest()
         return self._commit_next(m, tombstones=m["tombstones"] + [ts])
 
-    def replace(self, index_df: Optional[DataFrame], *,
-                vectors: Optional[str] = None, **write_kw) -> int:
+    def replace(self, index_df: Optional[DataFrame],
+                entries: Optional[dict] = None, **write_kw) -> int:
         """Commit ``index_df`` as the whole live view: ONE fresh segment
-        (none when ``index_df`` is None), no tombstones, and ``vectors``
-        as the vector directory. Nothing live is touched before the
-        commit, so ``index_df`` may itself read from this store."""
+        (none when ``index_df`` is None) and no tombstones. ``entries``
+        sets further manifest entries (``vectors``, ``config``); every
+        entry not named carries forward. Nothing live is touched before
+        the commit, so ``index_df`` may itself read from this store."""
         segments = []
         if index_df is not None:
             segments = [f"segments/{uuid.uuid4().hex[:16]}"]
             write_index(index_df, os.path.join(self.root, segments[0]),
                         **write_kw)
-        return self._commit_next(self.manifest(), segments=segments,
-                                 tombstones=[], vectors=vectors)
+        return self._commit_next(self.manifest(), **(entries or {}),
+                                 segments=segments, tombstones=[])
 
     # ------------------------------------------------------------- reads
     def read(self, version: Optional[int] = None) -> DataFrame:
@@ -213,12 +216,12 @@ class SegmentedIndexStore:
     def compact(self, **write_kw) -> int:
         """Merge the current view into ONE fresh segment (tombstones
         applied, probe-optimal layout restored across segment
-        boundaries) and commit a manifest referencing only it and the
-        same vectors. Old versions keep reading their old segments
-        until :meth:`prune`."""
+        boundaries) and commit a manifest referencing only it; its other
+        entries (vectors, config) carry forward. Old versions keep
+        reading their old segments until :meth:`prune`."""
         m = self.manifest()
         return self.replace(self.read() if m["segments"] else None,
-                            vectors=m.get("vectors"), **write_kw)
+                            **write_kw)
 
     def prune(self, keep_versions: int = 1) -> list[str]:
         """Reclaim storage: drop all but the newest ``keep_versions``

@@ -340,7 +340,9 @@ def test_save_crash_before_commit_keeps_previous_version(
     """A save that dies after writing its segment and vectors but before
     the manifest commit leaves the previous version live: the loaded
     index and a fresh server answer as before, top-p reranks included,
-    and a later prune() removes the orphaned directories."""
+    and a later prune() removes the orphaned directories. The crashing
+    save uses another seed, so answers stay right only if the previous
+    config stays live with the previous segments."""
     rng = np.random.default_rng(31)
     n, d = 400, 16
     vecs = rng.standard_normal((n, d)).astype(np.float32)
@@ -357,7 +359,8 @@ def test_save_crash_before_commit_keeps_previous_version(
     def crash(self, manifest):
         raise OSError("crash before the manifest commit")
 
-    other = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4)
+    other = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4,
+                  seed=lsh.cfg.seed + 1)
     other.index(list(range(n)), -vecs)
     monkeypatch.setattr(SegmentedIndexStore, "_commit", crash)
     with pytest.raises(OSError, match="crash before"):
@@ -388,6 +391,44 @@ def test_save_crash_before_commit_keeps_previous_version(
     )
     for kind in kept:
         assert set(os.listdir(os.path.join(path, kind))) == kept[kind]
+
+    # the same save, uninterrupted, switches config and segments together:
+    # a refreshed server follows the new seed
+    other.save_to_disk(path, include_vectors=True)
+    srv.refresh()
+    assert srv.cfg == other.cfg
+    for q in qs:
+        assert srv.get_top_k(q, 5) == other.get_top_k(q, 5)
+
+
+def test_resave_without_vectors_keeps_saved_vectors(spark, tmp_path):
+    """load (no vectors_df) -> delete -> re-save writes no vectors, so the
+    new version keeps the saved vector table: a fresh server still
+    answers top-p reranks, without the deleted ids."""
+    rng = np.random.default_rng(37)
+    n, d = 400, 16
+    vecs = rng.standard_normal((n, d)).astype(np.float32)
+    lsh = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4)
+    lsh.index(list(range(n)), vecs)
+    path = str(tmp_path / "idx")
+    lsh.save_to_disk(path, include_vectors=True)
+    vectors = SegmentedIndexStore(spark, path).manifest()["vectors"]
+
+    loaded = LSHRS.load_from_disk(spark, path)
+    loaded.delete([3, 50])
+    loaded.save_to_disk(path, include_vectors=True)
+    assert SegmentedIndexStore(spark, path).manifest()["vectors"] == vectors
+    assert os.path.isdir(os.path.join(path, vectors))
+
+    keep = [i for i in range(n) if i not in (3, 50)]
+    ref = LSHRS(spark, d, num_perm=16, num_bands=4, rows_per_band=4)
+    ref.index(keep, vecs[keep])
+    srv = IndexServer.from_saved(path)
+    for i in (3, 50, 211):
+        got = srv.query(vecs[i], top_k=5, top_p=0.5)
+        want = ref.query(vecs[i], top_k=5, top_p=0.5)
+        assert got and [j for j, _ in got] == [j for j, _ in want]
+        assert not {3, 50} & {j for j, _ in got}
 
 
 def test_ivf_delete_tombstones_visible_after_refresh(spark, tmp_path):
